@@ -41,22 +41,47 @@ object Bfs {
     */
   def hopDistance(edges: DataFrame, srcCol: String, dstCol: String,
                   seeds: DataFrame, seedCol: String,
-                  maxHops: Int, undirected: Boolean = false): DataFrame = {
+                  maxHops: Int, undirected: Boolean = false): DataFrame =
+    // a null seed is not a node: drop it rather than emit (null, 0)
+    layers(edges, srcCol, dstCol, Nil, maxHops, undirected,
+      seeds.select(col(seedCol).as("node")).where(col("node").isNotNull).distinct())
+
+  /** PER-SEED BFS distances — (seed, node, dist) for every seed and
+    * every node within `maxHops` of it: [[hopDistance]]'s loop with the
+    * seed label riding in the frontier key, so different seeds' waves
+    * expand independently in ONE fixpoint (state and shuffle are
+    * Σ per-seed reachability — size the seed SAMPLE accordingly; this
+    * is the bounded-radius, sampled-seed regime, not all-pairs).
+    */
+  def hopDistanceLabeled(edges: DataFrame, srcCol: String, dstCol: String,
+                         seeds: DataFrame, seedCol: String,
+                         maxHops: Int, undirected: Boolean = false): DataFrame =
+    layers(edges, srcCol, dstCol, Seq("seed"), maxHops, undirected,
+      seeds.select(col(seedCol).as("seed")).where(col("seed").isNotNull).distinct()
+        .withColumn("node", col("seed")))
+
+  /** The one BFS layer loop behind [[hopDistance]] (`keys` empty) and
+    * [[hopDistanceLabeled]] (`keys` = seed): frontier and settled rows
+    * are (keys, node) pairs, so with a seed key each seed's wave expands
+    * independently and the broadcast gates bound Σ per-seed
+    * reachability rather than the node count. `start` holds the hop-0
+    * (keys, node) rows.
+    */
+  private def layers(edges: DataFrame, srcCol: String, dstCol: String,
+                     keys: Seq[String], maxHops: Int, undirected: Boolean,
+                     start: DataFrame): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
+    val keyed = keys :+ "node"
     val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
       .filter(col("u") =!= col("v"))
     val e = (if (undirected) EdgeMirror.mirror(e0)
              else e0)
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // a null seed is not a node: drop it rather than emit (null, 0)
       // LoopFrames.checkpoint, not plain localCheckpoint: settled and
       // layer get UNIONED each hop, and preserved origin constraints on
       // checkpointed frames can crash Union.rewriteConstraints
-      val seed0 = graft.LoopFrames.checkpoint(
-        seeds.select(col(seedCol).as("node"))
-          .where(col("node").isNotNull).distinct()
-          .withColumn("dist", lit(0)))
+      val seed0 = graft.LoopFrames.checkpoint(start.withColumn("dist", lit(0)))
       // settled accumulates as a LAZY UNION of the per-hop materialized
       // layers (r20): re-materializing the whole settled set every hop was
       // an O(settled) copy per round for rows that never change. Counted
@@ -69,92 +94,29 @@ object Bfs {
       // undirected two-layer invariant (r21, ADVICE r20): across an
       // undirected edge |dist(u) - dist(w)| <= 1, so a neighbor of the
       // hop-(h-1) frontier that is already settled can only live in
-      // layers h-1 or h-2. The anti-join side is then TWO materialized
-      // layers instead of the whole settled union — per-hop broadcast
-      // build and plan size stay constant as hops grow. Directed graphs
-      // lack the invariant (a far-forward edge can point at an early
-      // layer) and keep the full settled side.
+      // layers h-1 or h-2 (of the same seed's wave). The anti-join side
+      // is then TWO materialized layers instead of the whole settled
+      // union — per-hop broadcast build and plan size stay constant as
+      // hops grow. Directed graphs lack the invariant (a far-forward edge
+      // can point at an early layer) and keep the full settled side.
       var prevLayer = frontier
       var prevCount = frontierCount
       var hop = 0
       while (hop < maxHops && frontierCount > 0) {
         hop += 1
         val fr = graft.LoopFrames.maybeBroadcast(
-          frontier.select(col("node").as("u")), frontierCount)
+          frontier.select(keys.map(col) :+ col("node").as("u"): _*), frontierCount)
         val (anti, antiCount) =
           if (undirected && hop > 1)
-            (frontier.select(col("node"))
-               .unionByName(prevLayer.select(col("node"))),
+            (frontier.select(keyed.map(col): _*)
+               .unionByName(prevLayer.select(keyed.map(col): _*)),
              frontierCount + prevCount)
-          else (settled.select(col("node")), settledCount)
+          else (settled.select(keyed.map(col): _*), settledCount)
         val st = graft.LoopFrames.maybeBroadcast(anti, antiCount)
         val layer = graft.LoopFrames.checkpoint(
           e.join(fr, "u")
-            .select(col("v").as("node")).distinct()
-            .join(st, Seq("node"), "left_anti")
-            .withColumn("dist", lit(hop)))
-        val layerCount = layer.count()
-        if (layerCount == 0L) graft.LoopFrames.release(layer)
-        else settled = settled.unionByName(layer)
-        settledCount += layerCount
-        prevLayer = frontier
-        prevCount = frontierCount
-        frontier = layer
-        frontierCount = layerCount
-      }
-      settled
-    } finally e.unpersist(false)
-  }
-
-  /** PER-SEED BFS distances — (seed, node, dist) for every seed and
-    * every node within `maxHops` of it: [[hopDistance]]'s loop with the
-    * seed label riding in the frontier key, so different seeds' waves
-    * expand independently in ONE fixpoint (state and shuffle are
-    * Σ per-seed reachability — size the seed SAMPLE accordingly; this
-    * is the bounded-radius, sampled-seed regime, not all-pairs).
-    */
-  def hopDistanceLabeled(edges: DataFrame, srcCol: String, dstCol: String,
-                         seeds: DataFrame, seedCol: String,
-                         maxHops: Int, undirected: Boolean = false): DataFrame = {
-    require(maxHops >= 0, "maxHops must be >= 0")
-    val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .filter(col("u") =!= col("v"))
-    val e = (if (undirected) EdgeMirror.mirror(e0)
-             else e0)
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val seed0 = graft.LoopFrames.checkpoint(
-        seeds.select(col(seedCol).as("seed"))
-          .where(col("seed").isNotNull).distinct()
-          .withColumn("node", col("seed"))
-          .withColumn("dist", lit(0)))
-      // same lazy-union + counted-broadcast regime as [[hopDistance]];
-      // here the frontier/settled rows are (seed, node) pairs, so the
-      // broadcast gate bounds Σ per-seed reachability, not node count
-      var settled = seed0.toDF()
-      var settledCount = seed0.count()
-      var frontier = seed0.toDF()
-      var frontierCount = settledCount
-      // same undirected two-layer anti-join invariant as [[hopDistance]],
-      // holding independently within each seed's wave
-      var prevLayer = frontier
-      var prevCount = frontierCount
-      var hop = 0
-      while (hop < maxHops && frontierCount > 0) {
-        hop += 1
-        val fr = graft.LoopFrames.maybeBroadcast(
-          frontier.select(col("seed"), col("node").as("u")), frontierCount)
-        val (anti, antiCount) =
-          if (undirected && hop > 1)
-            (frontier.select(col("seed"), col("node"))
-               .unionByName(prevLayer.select(col("seed"), col("node"))),
-             frontierCount + prevCount)
-          else (settled.select(col("seed"), col("node")), settledCount)
-        val st = graft.LoopFrames.maybeBroadcast(anti, antiCount)
-        val layer = graft.LoopFrames.checkpoint(
-          e.join(fr, "u")
-            .select(col("seed"), col("v").as("node")).distinct()
-            .join(st, Seq("seed", "node"), "left_anti")
+            .select(keys.map(col) :+ col("v").as("node"): _*).distinct()
+            .join(st, keyed, "left_anti")
             .withColumn("dist", lit(hop)))
         val layerCount = layer.count()
         if (layerCount == 0L) graft.LoopFrames.release(layer)

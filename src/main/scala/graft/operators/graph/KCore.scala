@@ -111,30 +111,115 @@ object KCore {
     deg
   }
 
-  /** Collect a counted-small remnant into CSR form: (original node ids,
-    * adjIdx, adj). Edge endpoints not in the alive node list are skipped
-    * defensively (the compaction invariant makes them impossible, but a
-    * stale edge must never resurrect a peeled node).
+  /** Peel state shared by [[run]] and [[coreness]]: the mirrored,
+    * deduplicated edge table `e` (self-loops dropped), the alive
+    * (node, deg) frame with its exact count, and the compaction
+    * bookkeeping. Invariant at every round top: `deg` = degree within
+    * the current alive set. Each entry point drives its own round
+    * sequence through [[peel]] and owns `e`'s release via [[close]].
     */
-  private def collectRemnant(alive: DataFrame, e: DataFrame)
-  : (Array[Any], Array[Int], Array[Int]) = {
-    val nodes: Array[Any] = alive.select(col("node")).collect().map(_.get(0))
-    val n = nodes.length
-    val idx = new java.util.HashMap[Any, Integer](n * 2)
-    var i = 0
-    while (i < n) { idx.put(nodes(i), i); i += 1 }
-    val pairs = e.collect().flatMap { r =>
-      val ui = idx.get(r.get(0)); val vi = idx.get(r.get(1))
-      if (ui == null || vi == null) None else Some((ui.intValue, vi.intValue))
+  private final class Peel(edges: DataFrame, srcCol: String, dstCol: String,
+                           localFinishEdges: Long) {
+    var e: DataFrame = EdgeMirror.mirror(
+        edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
+          .filter(col("u") =!= col("v")))
+      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    var alive: DataFrame = _
+    // true alive-node count, maintained exactly (ADVICE r16: a clamped
+    // estimate let the loop keep paying counts after the graph emptied)
+    var aliveCount = 0L
+    private var nodesAtCompact = 0L
+    private var peeledSince = 0L
+
+    /** The full-degree aggregation, exactly ONCE; every later round
+      * maintains `deg` by frontier decrements. True when the whole graph
+      * already fits the local finish.
+      */
+    def start(): Boolean = {
+      alive = e.groupBy(col("u").as("node"))
+        .agg(count(lit(1)).as("deg")).transform(graft.LoopFrames.materialize)
+      aliveCount = alive.count()
+      nodesAtCompact = aliveCount
+      fitsLocally(e.count())
     }
-    val deg0 = new Array[Int](n)
-    pairs.foreach { case (u, _) => deg0(u) += 1 }
-    val adjIdx = new Array[Int](n + 1)
-    i = 0; while (i < n) { adjIdx(i + 1) = adjIdx(i) + deg0(i); i += 1 }
-    val fill = java.util.Arrays.copyOf(adjIdx, n)
-    val adj = new Array[Int](pairs.length)
-    pairs.foreach { case (u, v) => adj(fill(u)) = v; fill(u) += 1 }
-    (nodes, adjIdx, adj)
+
+    private def fitsLocally(eCount: => Long): Boolean =
+      localFinishEdges > 0L && aliveCount <= localFinishEdges &&
+        eCount <= localFinishEdges
+
+    /** One decrement round: drop the `nPeeled` frontier rows `peeled`
+      * (all deg < k) from the alive set and subtract, per surviving
+      * neighbor, the edges it loses to them. True when the compaction
+      * that may follow just counted a remnant that fits the local finish.
+      */
+    def peel(peeled: DataFrame, nPeeled: Long, k: Int): Boolean = {
+      // decrements: edges whose u endpoint just peeled, counted per v —
+      // only frontier-incident edges are aggregated; the counted-small
+      // frontier is broadcast into the edge join (r20, guide §3.1), so
+      // the persisted edge table is never re-shuffled
+      val dec = e.join(graft.LoopFrames.maybeBroadcast(
+          peeled.select(col("node").as("u")), nPeeled), "u")
+        .groupBy(col("v").as("node")).agg(count(lit(1)).as("__dec__"))
+      val next = alive.filter(col("deg") >= k)
+        .join(dec, Seq("node"), "left")
+        .select(col("node"),
+          (col("deg") - coalesce(col("__dec__"), lit(0L))).as("deg"))
+        .transform(graft.LoopFrames.materialize)
+      graft.LoopFrames.release(alive)
+      alive = next
+      aliveCount -= nPeeled
+      peeledSince += nPeeled
+      // compact the edge table once half the nodes alive at the last
+      // compaction have peeled: stale edges are harmless (a peeled
+      // node never re-enters the frontier) but scanning them is not
+      // free, and a deep peel would otherwise scan the ORIGINAL table
+      // every round. Cost = one old-style round (two semi-joins +
+      // re-persist); the table then shrinks geometrically.
+      if (aliveCount == 0L || peeledSince * 2 < nodesAtCompact) return false
+      val compacted = e
+        .join(graft.LoopFrames.maybeBroadcast(
+          alive.select(col("node").as("u")), aliveCount), "u")
+        .join(graft.LoopFrames.maybeBroadcast(
+          alive.select(col("node").as("v")), aliveCount), "v")
+        .select(col("u"), col("v"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val eCount = compacted.count() // materialize before dropping the old blocks
+      e.unpersist(false)
+      e = compacted
+      nodesAtCompact = aliveCount
+      peeledSince = 0L
+      // remnant just counted ≤ threshold: finish exactly on the driver
+      fitsLocally(eCount)
+    }
+
+    /** Collect the counted-small remnant into CSR form (original node
+      * ids, adjIdx, adj) and free the alive frame. Edge endpoints not in
+      * the alive node list are skipped defensively (the compaction
+      * invariant makes them impossible, but a stale edge must never
+      * resurrect a peeled node).
+      */
+    def remnant(): (Array[Any], Array[Int], Array[Int]) = {
+      val nodes: Array[Any] = alive.select(col("node")).collect().map(_.get(0))
+      val n = nodes.length
+      val idx = new java.util.HashMap[Any, Integer](n * 2)
+      var i = 0
+      while (i < n) { idx.put(nodes(i), i); i += 1 }
+      val pairs = e.collect().flatMap { r =>
+        val ui = idx.get(r.get(0)); val vi = idx.get(r.get(1))
+        if (ui == null || vi == null) None else Some((ui.intValue, vi.intValue))
+      }
+      graft.LoopFrames.release(alive)
+      val deg0 = new Array[Int](n)
+      pairs.foreach { case (u, _) => deg0(u) += 1 }
+      val adjIdx = new Array[Int](n + 1)
+      i = 0; while (i < n) { adjIdx(i + 1) = adjIdx(i) + deg0(i); i += 1 }
+      val fill = java.util.Arrays.copyOf(adjIdx, n)
+      val adj = new Array[Int](pairs.length)
+      pairs.foreach { case (u, v) => adj(fill(u)) = v; fill(u) += 1 }
+      (nodes, adjIdx, adj)
+    }
+
+    def close(): Unit = e.unpersist(false)
   }
 
   /** Nodes of the k-core with their within-core degrees.
@@ -148,26 +233,13 @@ object KCore {
           maxIter: Int = 30, localFinishEdges: Long = 200000L): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxIter >= 1, "maxIter must be >= 1")
-    val spark = edges.sparkSession
-    val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .filter(col("u") =!= col("v"))
-    var e = EdgeMirror.mirror(e0)
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    val p = new Peel(edges, srcCol, dstCol, localFinishEdges)
     try {
-      // full-degree aggregation happens exactly ONCE; every later round
-      // maintains `deg` by frontier decrements (invariant: deg = degree
-      // within the current alive set)
-      var alive = e.groupBy(col("u").as("node"))
-        .agg(count(lit(1)).as("deg")).transform(graft.LoopFrames.materialize)
-      // true alive-node count, maintained exactly (ADVICE r16: a clamped
-      // estimate let the loop keep paying counts after the graph emptied)
-      var aliveCount = alive.count()
-      var nodesAtCompact = aliveCount
-      var peeledSince = 0L
       // exact driver finish of a counted-small remnant (see object doc):
       // k-core membership + within-core degrees from BZ core numbers
       def finishLocally(): DataFrame = {
-        val (nodes, adjIdx, adj) = collectRemnant(alive, e)
+        val schema = p.alive.schema
+        val (nodes, adjIdx, adj) = p.remnant()
         val inCore = bzCoreNumbers(nodes.length, adjIdx, adj).map(_ >= k)
         val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
         var i = 0
@@ -180,78 +252,36 @@ object KCore {
           }
           i += 1
         }
-        val out = spark.createDataFrame(rows, alive.schema)
-        graft.LoopFrames.release(alive)
-        out
+        edges.sparkSession.createDataFrame(rows, schema)
       }
-      if (localFinishEdges > 0L && aliveCount <= localFinishEdges &&
-          e.count() <= localFinishEdges) return finishLocally()
+      if (p.start()) return finishLocally()
       var iter = 0
       while (iter < maxIter) {
         // frontier = nodes falling below k under the CURRENT alive set;
         // derived from the checkpointed alive frame, so the uses below
         // (count + decrement join) re-run only a cheap filter
-        val peeled = alive.filter(col("deg") < k)
+        val peeled = p.alive.filter(col("deg") < k)
         val nPeeled = peeled.count()
         if (nPeeled == 0L) {
           // fixpoint: nobody peels, so `deg` is the within-core degree
-          return alive
+          return p.alive
         }
-        if (nPeeled == aliveCount) {
+        if (nPeeled == p.aliveCount) {
           // everything peels: the k-core is empty — skip the decrement
           // join and return the (empty, correctly-schema'd) survivor set
-          val empty = alive.filter(col("deg") >= k).transform(graft.LoopFrames.materialize)
-          graft.LoopFrames.release(alive)
+          val empty = p.alive.filter(col("deg") >= k).transform(graft.LoopFrames.materialize)
+          graft.LoopFrames.release(p.alive)
           return empty
         }
-        // decrements: edges whose u endpoint just peeled, counted per v —
-        // only frontier-incident edges are aggregated, and the frontier
-        // side is broadcast-small on real graphs
-        // broadcast the counted-small frontier into the edge join (r20,
-        // guide §3.1): the persisted edge table is never re-shuffled
-        val dec = e.join(graft.LoopFrames.maybeBroadcast(
-            peeled.select(col("node").as("u")), nPeeled), "u")
-          .groupBy(col("v").as("node")).agg(count(lit(1)).as("__dec__"))
-        val next = alive.filter(col("deg") >= k)
-          .join(dec, Seq("node"), "left")
-          .select(col("node"),
-            (col("deg") - coalesce(col("__dec__"), lit(0L))).as("deg"))
-          .transform(graft.LoopFrames.materialize)
-        graft.LoopFrames.release(alive)
-        alive = next
         iter += 1
-        // compact the edge table once half the nodes alive at the last
-        // compaction have peeled: stale edges are harmless (a peeled
-        // node never re-enters the frontier) but scanning them is not
-        // free, and a deep peel would otherwise scan the ORIGINAL table
-        // every round. Cost = one old-style round (two semi-joins +
-        // re-persist); the table then shrinks geometrically.
-        aliveCount -= nPeeled
-        peeledSince += nPeeled
-        if (peeledSince * 2 >= nodesAtCompact) {
-          val compacted = e
-            .join(graft.LoopFrames.maybeBroadcast(
-              alive.select(col("node").as("u")), aliveCount), "u")
-            .join(graft.LoopFrames.maybeBroadcast(
-              alive.select(col("node").as("v")), aliveCount), "v")
-            .select(col("u"), col("v"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          val eCount = compacted.count() // materialize before dropping the old blocks
-          e.unpersist(false)
-          e = compacted
-          nodesAtCompact = aliveCount
-          peeledSince = 0L
-          // remnant just counted ≤ threshold: finish exactly on the driver
-          if (localFinishEdges > 0L && eCount <= localFinishEdges &&
-              aliveCount <= localFinishEdges) return finishLocally()
-        }
+        if (p.peel(peeled, nPeeled, k)) return finishLocally()
       }
       // the alive count is monotone decreasing, so non-convergence in
       // maxIter rounds means the peel is still stripping layers — a bound
       // set too low (deep-peel graph), not a data error
       throw new IllegalStateException(
-        s"k-core peel did not converge in $maxIter rounds (alive=${alive.count()})")
-    } finally e.unpersist(false)
+        s"k-core peel did not converge in $maxIter rounds (alive=${p.alive.count()})")
+    } finally p.close()
   }
 
   /** Full k-core DECOMPOSITION: per-node core number (`coreness(v)` =
@@ -271,8 +301,8 @@ object KCore {
     * needs no re-aggregation — the level-k peel starts exactly where
     * level k−1's fixpoint left off, and nodes peeled while targeting the
     * k-core get coreness k−1 (Batagelj–Zaveršnik's order, level-
-    * synchronous). Total cost = Σ per-level peel rounds, each round
-    * frontier-incident work with the same compaction as [[run]]; the
+    * synchronous). Total cost = Σ per-level peel rounds, each round the
+    * frontier-incident peel step (and compaction) shared with [[run]]; the
     * accumulated result is a lazy union of small per-round checkpoints
     * (each materialized BEFORE its parent alive frame is released).
     *
@@ -298,33 +328,21 @@ object KCore {
                localFinishEdges: Long = 200000L): DataFrame = {
     require(maxK >= 0, "maxK must be >= 1, or 0 for run-to-empty (true coreness)")
     require(maxIterPerLevel >= 1, "maxIterPerLevel must be >= 1")
-    val spark = edges.sparkSession
-    val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .filter(col("u") =!= col("v"))
-    var e = EdgeMirror.mirror(e0)
-      .distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    val p = new Peel(edges, srcCol, dstCol, localFinishEdges)
     try {
-      var alive = e.groupBy(col("u").as("node"))
-        .agg(count(lit(1)).as("deg")).transform(graft.LoopFrames.materialize)
-      // true alive-node count, maintained exactly (ADVICE r16) — both the
-      // level-loop exit and the compaction baseline read it directly, so
-      // the peel never runs no-op levels over an empty alive frame
-      var aliveCount = alive.count()
-      var nodesAtCompact = aliveCount
-      var peeledSince = 0L
       var result: Option[DataFrame] = None
       var k = 1
       var iter = 0 // rounds spent at the current level
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        alive.schema("node"),
-        org.apache.spark.sql.types.StructField("coreness",
-          org.apache.spark.sql.types.LongType, nullable = false)))
       // exact driver finish (see object doc): continuing the peel at level
       // k over the remnant equals max(BZ core number within the remnant,
       // k−1) — every straggler not in the remnant's k-core has coreness
       // k−1 by the alive invariant; a clamped run caps at maxK
       def finishLocally(): DataFrame = {
-        val (nodes, adjIdx, adj) = collectRemnant(alive, e)
+        val outSchema = org.apache.spark.sql.types.StructType(Seq(
+          p.alive.schema("node"),
+          org.apache.spark.sql.types.StructField("coreness",
+            org.apache.spark.sql.types.LongType, nullable = false)))
+        val (nodes, adjIdx, adj) = p.remnant()
         val cs = bzCoreNumbers(nodes.length, adjIdx, adj)
         val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
         var i = 0
@@ -334,16 +352,17 @@ object KCore {
           rows.add(org.apache.spark.sql.Row(nodes(i), c))
           i += 1
         }
-        val local = spark.createDataFrame(rows, outSchema)
-        graft.LoopFrames.release(alive)
+        val local = edges.sparkSession.createDataFrame(rows, outSchema)
         result.map(_.unionByName(local)).getOrElse(local)
       }
-      if (localFinishEdges > 0L && aliveCount <= localFinishEdges &&
-          e.count() <= localFinishEdges) return finishLocally()
-      while ((maxK == 0 || k <= maxK) && aliveCount > 0) {
+      // the exact alive count drives both the level-loop exit and the
+      // compaction baseline, so the peel never runs no-op levels over an
+      // empty alive frame
+      if (p.start()) return finishLocally()
+      while ((maxK == 0 || k <= maxK) && p.aliveCount > 0) {
         // ONE node-sized aggregation per round: min alive degree (for the
         // level jump) + frontier size at the current level, one pass
-        val row = alive.agg(min(col("deg")).as("m"),
+        val row = p.alive.agg(min(col("deg")).as("m"),
           count(when(col("deg") < k, 1)).as("below")).head()
         val minDeg = row.getLong(0)
         var nPeeled = row.getLong(1)
@@ -358,56 +377,27 @@ object KCore {
           if (maxK == 0 || k <= maxK) {
             // frontier size at the new level (= |deg == minDeg| > 0); paid
             // once per DISTINCT core value, not per round
-            nPeeled = alive.filter(col("deg") < k).count()
+            nPeeled = p.alive.filter(col("deg") < k).count()
           }
         }
         if (maxK == 0 || k <= maxK) {
           iter += 1
           if (iter > maxIterPerLevel) throw new IllegalStateException(
             s"coreness peel at level $k did not converge in $maxIterPerLevel rounds")
-          val peeled = alive.filter(col("deg") < k)
+          val peeled = p.alive.filter(col("deg") < k)
           // materialize the level slice BEFORE releasing its parent
           val lvl = graft.LoopFrames.checkpoint(
             peeled.select(col("node")).withColumn("coreness", lit((k - 1).toLong)))
           result = Some(result.map(_.unionByName(lvl)).getOrElse(lvl))
-          // broadcast the counted-small frontier into the edge join (r20)
-          val dec = e.join(graft.LoopFrames.maybeBroadcast(
-              peeled.select(col("node").as("u")), nPeeled), "u")
-            .groupBy(col("v").as("node")).agg(count(lit(1)).as("__dec__"))
-          val next = alive.filter(col("deg") >= k)
-            .join(dec, Seq("node"), "left")
-            .select(col("node"),
-              (col("deg") - coalesce(col("__dec__"), lit(0L))).as("deg"))
-            .transform(graft.LoopFrames.materialize)
-          graft.LoopFrames.release(alive)
-          alive = next
-          aliveCount -= nPeeled
-          peeledSince += nPeeled
-          if (aliveCount > 0 && peeledSince * 2 >= nodesAtCompact) {
-            val compacted = e
-              .join(graft.LoopFrames.maybeBroadcast(
-                alive.select(col("node").as("u")), aliveCount), "u")
-              .join(graft.LoopFrames.maybeBroadcast(
-                alive.select(col("node").as("v")), aliveCount), "v")
-              .select(col("u"), col("v"))
-              .persist(StorageLevel.MEMORY_AND_DISK)
-            val eCount = compacted.count()
-            e.unpersist(false)
-            e = compacted
-            nodesAtCompact = aliveCount
-            peeledSince = 0L
-            // remnant just counted ≤ threshold: finish on the driver
-            if (localFinishEdges > 0L && eCount <= localFinishEdges &&
-                aliveCount <= localFinishEdges) return finishLocally()
-          }
+          if (p.peel(peeled, nPeeled, k)) return finishLocally()
         }
       }
       // clamped run: survivors report maxK ("≥ maxK"); run-to-empty exits
       // only at aliveCount == 0, so the survivor frame is empty and every
       // node already carries its true core number in `result`
-      val survivors = alive.select(col("node"))
+      val survivors = p.alive.select(col("node"))
         .withColumn("coreness", lit(maxK.toLong))
       result.map(_.unionByName(survivors)).getOrElse(survivors)
-    } finally e.unpersist(false)
+    } finally p.close()
   }
 }

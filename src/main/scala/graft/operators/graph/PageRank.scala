@@ -22,25 +22,10 @@ import org.apache.spark.storage.StorageLevel
   * the LOST mass is simply not re-injected (ranks sum to slightly
   * under U), which keeps every value a pure function of the graph.
   *
-  * Scale shape: the edge table is joined once per iteration on src and
-  * aggregated once on dst with map-side combine; ranks and degrees are
-  * node-sized. TWO JOIN REGIMES (r20, guide §3.1): when the counted node
-  * set fits `graft.graph.broadcastNodes` (default 1M rows) the rank frame
-  * is BROADCAST into the edge join — the persisted edge table is never
-  * re-exchanged or re-sorted, and each iteration's only shuffle is the
-  * node-sized partial-aggregated (dst, share) map output. Above the
-  * limit, the classic shape: edges pre-partitioned on src + persisted so
-  * every iteration reuses one exchange; K iterations = K edge-shuffles,
-  * the canonical distributed PageRank cost. Each iteration's rank table is
-  * `localCheckpoint`ed: ranks_k is read three times building
-  * ranks_{k+1} (dangling, inSum, next input), and under plain
-  * persist() the plan tree still NESTS k levels of lineage, so
-  * analysis/AQE-replan cost grows with k and dominates past a few
-  * iterations (measured 3.4→4.8 s/iter growth at sf0.1; constant
-  * ~0.5 s after truncation). On a real cluster set
-  * `graft.checkpoint.dir` to route loop frames to reliable checkpoints
-  * if executor loss matters — the algorithm is oblivious. Dangling mass is a 1-row aggregate broadcast back
-  * in-plan (no driver round-trip beyond job scheduling).
+  * Scale shape: one shared power-iteration kernel ([[personalized]],
+  * also behind weighted PageRank and [[TrustRank]]) joins the edge table
+  * once per iteration on src and aggregates once on dst with map-side
+  * combine; ranks and degrees are node-sized.
   *
   * No reference counterpart; classic-OLAP/graph extension per the
   * builder prompt (cf. GraphX's Pregel PageRank — re-expressed
@@ -65,64 +50,12 @@ object PageRank {
     // input-sized shuffle here
     val e = (if (edgesDistinct) sel else sel.distinct())
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .transform(graft.LoopFrames.materialize)
-    val n = nodes.count()
-    require(n > 0, "PageRank over an empty edge set (no nodes)")
-    // counted-small node set → broadcast the rank frame into each round's
-    // edge join (guide §3.1): the per-round exchange+sort of the edge
-    // table disappears; join strategy cannot change the exact integer
-    // results. Gated on the ACTUAL node count vs graft.graph.broadcastNodes.
-    val bcast = graft.LoopFrames.broadcastable(e.sparkSession, n)
+    val (nodes, n) = countedNodes(e)
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // edge+degree table is iteration-invariant. Broadcast regime: build it
-    // with a broadcast join (no exchange at all — e's persisted layout is
-    // reused) since no iteration needs src partitioning any more. Shuffle
-    // regime (huge node sets): persist it partitioned on src so each
-    // iteration's rank join reuses one exchange.
-    val edgesDeg = (if (bcast) e.join(broadcast(outdeg), "src")
-                    else e.join(outdeg, "src").repartition(col("src")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = (15L * unit) / (100L * n)
-    // iteration-invariant sink set (nodes with no out-edges); when it is
-    // EMPTY (every undirected graph) dm is identically 0, so the per-round
-    // dangling aggregation job is skipped outright — same exact algebra
-    val sinks = nodes.join(outdeg, nodes("node") === outdeg("src"), "left_anti")
-      .transform(graft.LoopFrames.materialize)
-    val haveSinks = !sinks.isEmpty
-    var ranks = nodes.withColumn("r", lit(unit / n)).transform(graft.LoopFrames.materialize)
-    for (_ <- 1 to iterations) {
-      val rk = if (bcast) broadcast(ranks) else ranks
-      val inSum = edgesDeg
-        .join(rk, edgesDeg("src") === rk("node"))
-        // integral `div`, NOT double `/`+cast: a quotient one ulp under an
-        // integer would round up in double and truncate to the wrong floor
-        .select(col("dst"), expr("r div outdeg").as("share"))
-        .groupBy(col("dst")).agg(sum(col("share")).as("insum"))
-      val prev = ranks
-      val merged = nodes.join(inSum, nodes("node") === inSum("dst"), "left")
-      ranks = (if (haveSinks) {
-          val dangling = ranks.join(sinks, "node", "left_semi")
-            .agg(coalesce(sum(col("r")), lit(0L)).as("dm"))
-          merged.crossJoin(broadcast(dangling))
-            .select(col("node"),
-              (lit(base) + expr(s"(85 * (coalesce(insum, 0L) + dm div ${n}L)) div 100"))
-                .as("r"))
-        } else merged.select(col("node"),
-          (lit(base) + expr("(85 * coalesce(insum, 0L)) div 100")).as("r")))
-        .transform(graft.LoopFrames.materialize) // eager: materialize + truncate lineage
-      // RDD-level release: Dataset.unpersist no-ops on checkpoint blocks
-      graft.LoopFrames.release(prev)
-    }
-    // the result is the final eager checkpoint — the iteration-invariant
-    // frames can be freed now rather than waiting on the ContextCleaner
-    e.unpersist(false)
-    edgesDeg.unpersist(false)
-    graft.LoopFrames.release(nodes)
-    graft.LoopFrames.release(sinks)
-    ranks.select(col("node"), col("r").as("rank_fp"),
-      (col("r").cast("double") / unit.toDouble).as("rank"))
+    // integral `div`, NOT double `/`+cast: a quotient one ulp under an
+    // integer would round up in double and truncate to the wrong floor
+    personalized(e, outdeg, "r div outdeg", nodes, n, "true", n,
+      iterations, unit, "rank")
   }
 
   /** Weighted PageRank: a node's rank splits across its out-edges in
@@ -147,52 +80,117 @@ object PageRank {
       .filter(col("w") > 0)
     val e = sel.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .transform(graft.LoopFrames.materialize)
-    val n = nodes.count()
-    require(n > 0, "PageRank over an empty edge set (no nodes)")
+    val (nodes, n) = countedNodes(e)
     val swt = e.groupBy(col("src")).agg(sum(col("w")).as("sw"))
     val maxSw = swt.agg(max(col("sw"))).collect()(0).getLong(0)
     require(maxSw <= 3037000499L, // floor(sqrt(Long.MaxValue))
       s"weighted PageRank: a node carries weight mass $maxSw > sqrt(Long.Max) " +
         "— rescale weights (the exact share split would overflow)")
-    // same broadcast/sink-skip regime as [[run]] (which see)
+    personalized(e, swt, "w * (r div sw) + ((r % sw) * w) div sw", nodes, n,
+      "true", n, iterations, unit, "rank")
+  }
+
+  /** The materialized distinct node set of a persisted (src, dst) edge
+    * table, with its (non-zero) count. */
+  private def countedNodes(e: DataFrame): (DataFrame, Long) = {
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+      .transform(graft.LoopFrames.materialize)
+    val n = nodes.count()
+    require(n > 0, "PageRank over an empty edge set (no nodes)")
+    (nodes, n)
+  }
+
+  /** The one personalised-PageRank power iteration behind [[run]],
+    * [[runWeighted]] and [[TrustRank.run]]:
+    *
+    *   r'(v) = [tele(v)]·(15·U div (100·t))
+    *         + 85·( inSum(v) + [tele(v)]·(dm div t) ) div 100,
+    *   inSum(v) = Σ_{u→v} share(u→v),   r0(v) = [tele(v)]·(U div t)
+    *
+    * where dm is the rank mass parked on sinks (nodes with no out-edges)
+    * and t the number of teleport nodes. Teleport AND dangling mass both
+    * go to the teleport set, per the (personalized) random-surfer model.
+    *
+    * @param e         persisted edge table with `src`, `dst` (and whatever
+    *                  `share` reads); unpersisted here
+    * @param mass      per-source table keyed `src` — its non-`src` column
+    *                  is what `share` divides by; its key set is the
+    *                  non-sink node set
+    * @param share     SQL expression of one edge's integer share of r(src)
+    * @param nodes     materialized node frame (`node` plus any column
+    *                  `teleport` reads), `n` rows; released here
+    * @param teleport  SQL boolean over `nodes`: the literal `true` for
+    *                  uniform teleport, which Catalyst folds away so the
+    *                  per-round plan carries no flag at all
+    * @param out       output column stem: (node, `out`_fp, `out`)
+    *
+    * TWO JOIN REGIMES (r20, guide §3.1): when the counted node set fits
+    * `graft.graph.broadcastNodes` (default 1M rows) the rank frame is
+    * BROADCAST into the edge join, and the edge+mass table is built with
+    * a broadcast join too — the persisted edge table is never
+    * re-exchanged or re-sorted, and each round's only shuffle is the
+    * node-sized partial-aggregated (dst, share) map output. Above the
+    * limit the edge+mass table is persisted partitioned on src, so every
+    * round's rank join reuses one exchange. Join strategy cannot change
+    * the exact integer results. The sink set is iteration-invariant; when
+    * it is EMPTY (every undirected graph) dm is identically 0 and the
+    * per-round dangling aggregation job is skipped outright — same exact
+    * algebra. The dangling mass is a 1-row aggregate broadcast back
+    * in-plan. Each round's rank table is materialized through
+    * [[graft.LoopFrames]] (eager, lineage-truncating): ranks_k is read
+    * three times building ranks_{k+1} (dangling, inSum, next input), and
+    * under plain persist() the plan tree still NESTS k levels of lineage,
+    * so analysis/AQE-replan cost grows with k and dominates past a few
+    * iterations (measured 3.4→4.8 s/iter growth at sf0.1; constant
+    * ~0.5 s after truncation). The previous round's frame is released at
+    * the RDD level, where `Dataset.unpersist` no-ops. On a real cluster
+    * set `graft.checkpoint.dir` to route loop frames to reliable
+    * checkpoints if executor loss matters — the algorithm is oblivious.
+    */
+  private[graph] def personalized(e: DataFrame, mass: DataFrame, share: String,
+                                  nodes: DataFrame, n: Long, teleport: String,
+                                  t: Long, iterations: Int, unit: Long,
+                                  out: String): DataFrame = {
     val bcast = graft.LoopFrames.broadcastable(e.sparkSession, n)
-    val edgesW = (if (bcast) e.join(broadcast(swt), "src")
-                  else e.join(swt, "src").repartition(col("src")))
+    val edgesMass = (if (bcast) e.join(broadcast(mass), "src")
+                     else e.join(mass, "src").repartition(col("src")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val base = (15L * unit) / (100L * n)
-    val sinks = nodes.join(swt, nodes("node") === swt("src"), "left_anti")
+    val base = (15L * unit) / (100L * t)
+    val ids = nodes.select(col("node"))
+    val sinks = ids.join(mass, ids("node") === mass("src"), "left_anti")
       .transform(graft.LoopFrames.materialize)
     val haveSinks = !sinks.isEmpty
-    var ranks = nodes.withColumn("r", lit(unit / n)).transform(graft.LoopFrames.materialize)
+    val tele = s"CASE WHEN $teleport THEN ${base}L ELSE 0L END"
+    var ranks = nodes
+      .select(col("node"), expr(s"CASE WHEN $teleport THEN ${unit / t}L ELSE 0L END").as("r"))
+      .transform(graft.LoopFrames.materialize)
     for (_ <- 1 to iterations) {
       val rk = if (bcast) broadcast(ranks) else ranks
-      val inSum = edgesW
-        .join(rk, edgesW("src") === rk("node"))
-        .select(col("dst"),
-          expr("w * (r div sw) + ((r % sw) * w) div sw").as("share"))
+      val inSum = edgesMass
+        .join(rk, edgesMass("src") === rk("node"))
+        .select(col("dst"), expr(share).as("share"))
         .groupBy(col("dst")).agg(sum(col("share")).as("insum"))
       val prev = ranks
       val merged = nodes.join(inSum, nodes("node") === inSum("dst"), "left")
       ranks = (if (haveSinks) {
           val dangling = ranks.join(sinks, "node", "left_semi")
             .agg(coalesce(sum(col("r")), lit(0L)).as("dm"))
-          merged.crossJoin(broadcast(dangling))
-            .select(col("node"),
-              (lit(base) + expr(s"(85 * (coalesce(insum, 0L) + dm div ${n}L)) div 100"))
-                .as("r"))
+          merged.crossJoin(broadcast(dangling)).select(col("node"), expr(s"$tele + " +
+            s"(85 * (coalesce(insum, 0L) + CASE WHEN $teleport THEN dm div ${t}L ELSE 0L END)) div 100")
+            .as("r"))
         } else merged.select(col("node"),
-          (lit(base) + expr("(85 * coalesce(insum, 0L)) div 100")).as("r")))
+          expr(s"$tele + (85 * coalesce(insum, 0L)) div 100").as("r")))
         .transform(graft.LoopFrames.materialize)
       graft.LoopFrames.release(prev)
     }
+    // the result is the final eager checkpoint — the iteration-invariant
+    // frames can be freed now rather than waiting on the ContextCleaner
     e.unpersist(false)
-    edgesW.unpersist(false)
+    edgesMass.unpersist(false)
     graft.LoopFrames.release(nodes)
     graft.LoopFrames.release(sinks)
-    ranks.select(col("node"), col("r").as("rank_fp"),
-      (col("r").cast("double") / unit.toDouble).as("rank"))
+    ranks.select(col("node"), col("r").as(s"${out}_fp"),
+      (col("r").cast("double") / unit.toDouble).as(out))
   }
 }

@@ -65,30 +65,39 @@ class GraphPropertySpec extends AnyFunSuite {
     // the 100 TB fallback path (r21, VERDICT r20 ask #10): every counted-
     // small loop frame that normally broadcasts must produce the same
     // rows when the gate forces the classic shuffle join, or the fallback
-    // rots unexercised. PageRank covers the per-round edge join; Bfs
-    // (undirected) additionally covers the two-layer anti-join side.
+    // rots unexercised. Every graph entry point that reads the gate is
+    // pinned: the rank kernel (plain, weighted, seeded), the BFS layer
+    // loop (plain and labeled; undirected adds the two-layer anti-join
+    // side), the k-core peel (local finish off, so the distributed
+    // decrement and compaction rounds run), label propagation and Sssp.
     import spark.implicits._
+    import graft.operators.graph._
     val rnd = new scala.util.Random(23)
     val edges = Seq.fill(200)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
       .filter(p => p._1 != p._2).distinct
+    val e = edges.toDF("s", "d")
+    val ew = edges.map { case (a, b) => (a, b, 1L + (a * 7 + b) % 5) }.toDF("s", "d", "w")
     val seeds = (0L to 39L by 5).toDF("n")
-    def both[A](run: => Seq[A]): (Seq[A], Seq[A]) = {
-      val bc = run
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString(",")).toSeq.sorted
+    def both(name: String)(run: => org.apache.spark.sql.DataFrame): Unit = {
+      val bc = rows(run)
       spark.conf.set(graft.LoopFrames.BroadcastNodesKey, "0")
-      try { (bc, run) } finally spark.conf.unset(graft.LoopFrames.BroadcastNodesKey)
+      val sh = try rows(run) finally spark.conf.unset(graft.LoopFrames.BroadcastNodesKey)
+      assert(bc.nonEmpty, name)
+      assert(bc == sh, name)
     }
-    val (prB, prS) = both {
-      graft.operators.graph.PageRank.run(edges.toDF("s", "d"), "s", "d",
-          iterations = 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    }
-    assert(prB == prS)
-    val (bfB, bfS) = both {
-      graft.operators.graph.Bfs.hopDistance(edges.toDF("s", "d"), "s", "d",
-          seeds, "n", maxHops = 5, undirected = true)
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
-    }
-    assert(bfB == bfS)
+    both("PageRank.run")(PageRank.run(e, "s", "d", iterations = 3))
+    both("PageRank.runWeighted")(PageRank.runWeighted(ew, "s", "d", "w", iterations = 3))
+    both("TrustRank.run")(TrustRank.run(e, "s", "d", seeds, "n", iterations = 3))
+    both("Bfs.hopDistance")(Bfs.hopDistance(e, "s", "d", seeds, "n",
+      maxHops = 5, undirected = true))
+    both("Bfs.hopDistanceLabeled")(Bfs.hopDistanceLabeled(e, "s", "d", seeds, "n",
+      maxHops = 5, undirected = true))
+    both("KCore.run")(KCore.run(e, "s", "d", k = 4, localFinishEdges = 0L))
+    both("KCore.coreness")(KCore.coreness(e, "s", "d", maxK = 0, localFinishEdges = 0L))
+    both("LabelPropagation.run")(LabelPropagation.run(e, "s", "d", iterations = 3))
+    both("Sssp.run")(Sssp.run(ew, "s", "d", "w", seeds, "n", undirected = true))
   }
 
   test("property: label propagation equals naive synchronous LPA with the (cnt, min-label) tie rule") {
